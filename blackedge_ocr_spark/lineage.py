@@ -18,8 +18,13 @@ Streaming state, per SURVEY §4.3-4:
   the rerun replaces the unacked bucket's partitions instead of
   appending a second copy.
 - On rerun, buckets already present in the lineage manifest are
-  skipped *before* any compute (partition pruning via an isin filter
-  on the bucket column), so a killed job resumes where it stopped.
+  filtered out before ``transform`` is called (once per invocation),
+  so a killed job resumes where it stopped. Each batch's bucket
+  predicate is a data filter on the source scan, not partition
+  pruning: the source is still read once per batch.
+- Each batch is one write clustered on the bucket column (one file
+  per bucket); its lineage counters are observed in that write
+  (``DataFrame.observe``), not read back from the files.
 
 Lineage row: part_id, n_docs, n_spans, n_problem_docs, n_used_secondary,
 n_errors, batch_wall_sec, batch — enough to audit completeness (sum of
@@ -30,7 +35,7 @@ from __future__ import annotations
 
 import time
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -107,90 +112,78 @@ def run_with_checkpoint(
     bucket-batch, checkpointing each batch.
 
     transform: DataFrame -> DataFrame producing the RESULT_SCHEMA
-    columns (out_spans, problems, used_secondary, ...). ``max_batches``
-    caps work for this invocation (simulates preemption; rerun to
-    finish).
+    columns (out_spans, problems, used_secondary, ...). It is called
+    ONCE per invocation, on ``docs`` filtered to this invocation's
+    buckets; each batch then writes ``result.filter(part_id in batch)``
+    — one clustered write (one file per bucket) whose observed
+    counters are the lineage metrics. ``max_batches`` caps work for
+    this invocation (simulates preemption; rerun to finish).
 
     Returns {"processed": [...part_ids...], "skipped": [...]}.
     """
-    docs = with_bucket(docs, n_buckets)
     done = completed_buckets(spark, output, n_buckets)
     todo = sorted(set(range(n_buckets)) - done)
     batches = [
         todo[i : i + buckets_per_batch]
         for i in range(0, len(todo), buckets_per_batch)
-    ]
-    if max_batches is not None:
-        batches = batches[:max_batches]
+    ][:max_batches]
+    if not batches:
+        return {"processed": [], "skipped": sorted(done)}
+    picked = [pid for batch in batches for pid in batch]
+    # Filter BEFORE the transform: a cache inside it (the mega-chunk
+    # table) is beyond the reach of the per-batch scan predicate, so
+    # this keeps its work to the unacked buckets of this invocation.
+    docs = with_bucket(docs, n_buckets).filter(F.col("part_id").isin(picked))
+    result = with_bucket(transform(docs.drop("part_id")), n_buckets)
+    counters = {
+        "n_docs": F.lit(1),
+        "n_spans": F.size("out_spans"),
+        "n_problem_docs": (F.size("problems") > 0).cast("long"),
+        "n_used_secondary": F.col("used_secondary").cast("long"),
+        "n_errors": F.col("workflow").isNull().cast("long"),
+    }
 
     processed: list[int] = []
     for bi, bucket_ids in enumerate(batches):
         t0 = time.time()
-        part = docs.filter(F.col("part_id").isin(bucket_ids))
-        result = transform(part.drop("part_id"))
-        result = with_bucket(result, n_buckets)
+        observation = Observation()
+        # The batch predicate reaches the parquet scan as a data filter
+        # (the source is still read once per batch). Clustering on
+        # part_id gives each bucket one write task, hence one file. The
+        # observe sits in the write's result stage, where Spark merges
+        # accumulator updates once per partition, so a retried task
+        # cannot count its rows twice.
+        batch = (
+            result.filter(F.col("part_id").isin(bucket_ids))
+            .repartition("part_id")
+            .observe(
+                observation,
+                *[
+                    F.sum(F.when(F.col("part_id") == pid, e)).alias(f"{k}_{pid}")
+                    for pid in bucket_ids
+                    for k, e in counters.items()
+                ],
+            )
+        )
         # Idempotent publish (crash between data write and lineage ack):
         # dynamic partition overwrite replaces exactly the part_id
         # partitions this batch produces, so re-running an unacked
         # bucket swaps in a fresh copy instead of appending duplicates.
-        # Acked buckets are never revisited (pruned above), so their
-        # partitions are never touched again.
-        result.write.mode("overwrite").option(
+        # Acked buckets are never revisited (filtered out above), so
+        # their partitions are never touched again.
+        batch.write.mode("overwrite").option(
             "partitionOverwriteMode", "dynamic"
         ).partitionBy("part_id").parquet(f"{output}/data")
         wall = time.time() - t0
 
-        # Metrics come from the files just written — auditing the
-        # actual sink contents — rather than re-executing the whole
-        # transform (including its Arrow OCR stage) a second time.
-        # An ALL-EMPTY batch commits only _SUCCESS (no footer to infer
-        # a schema from) — ack zero-doc lineage rows instead of
-        # crashing, or the rerun loops on the same empty batch forever.
-        from pyspark.sql.utils import AnalysisException
-
-        try:
-            written = spark.read.parquet(f"{output}/data").filter(
-                F.col("part_id").isin(bucket_ids)
-            )
-        except AnalysisException as e:
-            if (e.getErrorClass() or "") not in (
-                "UNABLE_TO_INFER_SCHEMA",
-                "PATH_NOT_FOUND",
-            ):
-                raise
-            written = None
-        metrics = [] if written is None else (
-            written.groupBy("part_id")
-            .agg(
-                F.count("*").alias("n_docs"),
-                F.sum(F.size("out_spans")).alias("n_spans"),
-                F.sum((F.size("problems") > 0).cast("long")).alias(
-                    "n_problem_docs"
-                ),
-                F.sum(F.col("used_secondary").cast("long")).alias(
-                    "n_used_secondary"
-                ),
-                F.sum(F.col("workflow").isNull().cast("long")).alias("n_errors"),
-            )
-            .collect()
-        )
-        by_part = {m["part_id"]: m for m in metrics}
-        rows = []
-        for pid in bucket_ids:
-            m = by_part.get(pid)
-            rows.append(
-                (
-                    pid,
-                    m["n_docs"] if m else 0,
-                    m["n_spans"] if m else 0,
-                    m["n_problem_docs"] if m else 0,
-                    m["n_used_secondary"] if m else 0,
-                    m["n_errors"] if m else 0,
-                    float(wall),
-                    bi,
-                    n_buckets,
-                )
-            )
+        # An all-empty batch observes null sums: ack them as zero-doc
+        # rows, or the rerun loops on the same empty batch forever.
+        m = observation.get
+        rows = [
+            (pid, *(m[f"{k}_{pid}"] or 0 for k in counters), wall, bi,
+             n_buckets)
+            for pid in bucket_ids
+        ]
         spark.createDataFrame(rows, LINEAGE_SCHEMA).coalesce(1).write.mode(
             "append"
         ).parquet(f"{output}/_lineage")

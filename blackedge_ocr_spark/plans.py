@@ -123,12 +123,17 @@ def count_cache_build_python_stages(df: DataFrame) -> int:
 
 
 def scan_info(df: DataFrame) -> dict:
-    """PushedFilters / ReadSchema of the first parquet scan."""
+    """PushedFilters / DataFilters / ReadSchema of the first parquet
+    scan. DataFilters are the data-column predicates planned at the
+    scan, including ones the parquet reader cannot push (e.g. on a
+    hash of a column); only the simple plan string prints them."""
     plan = formatted_plan(df)
     pushed = re.search(r"PushedFilters: \[(.*?)\]", plan)
+    data = re.search(r"DataFilters: \[(.*?)\], Format:", simple_plan(df))
     schema = re.search(r"ReadSchema: (.*)", plan)
     return {
         "pushed_filters": pushed.group(1) if pushed else "",
+        "data_filters": data.group(1) if data else "",
         "read_schema": schema.group(1).strip() if schema else "",
     }
 

@@ -8,8 +8,12 @@ Usage (cluster):
 
 The job spansifies (or segments, with --from-html) the corpus, runs
 the extract-then-validate pipeline, and writes Hive-partitioned
-parquet with a per-partition lineage manifest. Rerunning after a kill
-resumes: completed buckets are pruned before any compute.
+parquet (one file per bucket) with a per-partition lineage manifest
+whose counters are observed in the write itself. The pipeline is
+planned once per invocation over the buckets not yet acked; each
+batch filters it to its buckets at the source scan (a data filter,
+so the source is still read once per batch). Rerunning after a kill
+resumes: acked buckets are filtered out before the pipeline runs.
 """
 
 from __future__ import annotations

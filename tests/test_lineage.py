@@ -176,3 +176,62 @@ def test_resume_with_different_n_buckets_refuses(spark, tmp_path):
     run_with_checkpoint(spark, docs, transform, out, n_buckets=16)
     with pytest.raises(ValueError, match="n_buckets"):
         run_with_checkpoint(spark, docs, transform, out, n_buckets=64)
+
+
+def test_observed_counters_match_written_files(spark, tmp_path):
+    """The lineage counters are observed in the write, not read back:
+    audit every bucket's row against a direct aggregate over the
+    files in its ``data/part_id=N`` directory, and check each
+    non-empty bucket holds exactly one data file."""
+    out = tmp_path / "ckpt"
+    docs = spansify_documents(spark, SF)
+    run_with_checkpoint(
+        spark, docs, _transform, str(out), n_buckets=8, buckets_per_batch=4,
+    )
+    counters = ["n_docs", "n_spans", "n_problem_docs", "n_used_secondary",
+                "n_errors"]
+    lineage = {
+        r["part_id"]: r for r in spark.read.parquet(f"{out}/_lineage").collect()
+    }
+    assert sorted(lineage) == list(range(8))
+    for pid, row in lineage.items():
+        bucket = out / "data" / f"part_id={pid}"
+        files = sorted(bucket.glob("part-*")) if bucket.exists() else []
+        assert len(files) == (1 if row["n_docs"] else 0), (pid, files)
+        if not files:
+            assert all(row[c] == 0 for c in counters), row
+            continue
+        direct = spark.read.parquet(str(bucket)).agg(
+            F.count("*").alias("n_docs"),
+            F.sum(F.size("out_spans")).alias("n_spans"),
+            F.sum((F.size("problems") > 0).cast("long")).alias("n_problem_docs"),
+            F.sum(F.col("used_secondary").cast("long")).alias("n_used_secondary"),
+            F.sum(F.col("workflow").isNull().cast("long")).alias("n_errors"),
+        ).first()
+        assert {c: row[c] for c in counters} == direct.asDict(), pid
+    assert sum(r["n_docs"] for r in lineage.values()) == 500
+
+
+def test_mega_chunk_checkpoint_resume_matches_default(spark, tmp_path):
+    """The mega-document split path through the checkpoint loop, killed
+    after one batch and resumed: the output holds the same rows as the
+    default path, each doc exactly once."""
+    out = str(tmp_path / "ckpt")
+    docs = spansify_documents(spark, SF)
+
+    def mega(d):
+        return extract_documents(d, query_col="query", mega_media_chunk=16)
+
+    r1 = run_with_checkpoint(
+        spark, docs, mega, out, n_buckets=8, buckets_per_batch=4,
+        max_batches=1,
+    )
+    r2 = run_with_checkpoint(
+        spark, docs, mega, out, n_buckets=8, buckets_per_batch=4,
+    )
+    assert sorted(r1["processed"] + r2["processed"]) == list(range(8))
+    expected = _transform(docs)
+    got = spark.read.parquet(f"{out}/data").select(*expected.columns)
+    assert got.count() == got.select("doc_id").distinct().count() == 500
+    assert got.exceptAll(expected).count() == 0
+    assert expected.exceptAll(got).count() == 0

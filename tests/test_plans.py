@@ -45,6 +45,53 @@ def test_filter_pushdown_reaches_parquet_scan(spark):
     assert "lang" not in info["read_schema"]
 
 
+def test_checkpoint_batch_filters_at_scan_one_arrow_stage(
+    spark, tmp_path, monkeypatch
+):
+    """Each run_with_checkpoint batch on the job.py default path must
+    filter to its buckets AT THE SOURCE SCAN and cross the Python
+    boundary once: a predicate stranded above the Arrow stage would
+    run OCR over the whole corpus on every batch, with identical
+    output."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    from blackedge_ocr_spark.lineage import run_with_checkpoint
+
+    written = []
+    parquet = DataFrameWriter.parquet
+
+    def record(self, path, *args, **kwargs):
+        if path.endswith("/data"):
+            written.append(self._df)
+        return parquet(self, path, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", record)
+    run_with_checkpoint(
+        spark,
+        spansify_documents(spark, SF),
+        lambda d: extract_documents(d, query_col="query"),
+        str(tmp_path / "o"),
+        n_buckets=16,
+        buckets_per_batch=4,
+        max_batches=2,
+    )
+    assert len(written) == 2
+    # scan metadata strings are abbreviated past 100 chars by default
+    key = "spark.sql.maxMetadataStringLength"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "10000")
+    try:
+        for batch, ids in zip(written, ("(0,1,2,3)", "(4,5,6,7)")):
+            info = plans.scan_info(batch)
+            filters = info["pushed_filters"] + info["data_filters"]
+            assert "xxhash64" in filters and f"IN {ids}" in filters, info
+            assert plans.count_python_stages(batch) == 1
+            # the source spread plus the clustering on part_id
+            assert plans.count_exchanges(batch) == 2
+    finally:
+        spark.conf.set(key, old)
+
+
 def test_problem_detector_fuses_into_one_projection(spark):
     """The 10 problem checks evaluate as ONE projection over one scan
     — not 10 passes, no shuffle. (Higher-order lambdas are codegen-
